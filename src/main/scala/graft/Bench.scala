@@ -1,5 +1,6 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.util.RawValue
 
 /** Benchmark main: times every SparkEntry query at SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line. A failing query is reported as an explicit error
@@ -16,41 +17,13 @@ import org.apache.spark.sql.SparkSession
   * the budget is reached. The complete, full-precision result is always
   * written to /root/repo/BENCH_FULL.json. */
 object Bench {
+  type Result = Either[String, Double]
+
+  private val json = new ObjectMapper()
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // AQE coalesces shuffle reads by BYTE size (1 MiB floor); the
-      // per-group model kernels (beta-mixture EM, NB-GLM, hclust) are
-      // heavy CPU over few bytes, and byte-based coalescing collapses
-      // them to 1-7 tasks (measured: the 500-gene EM stage ran 7-wide,
-      // ~5× the wall of the 32-wide plan). A smaller floor keeps
-      // parallelismFirst effective for CPU-dense stages.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-      // static conf, default 100: a 95-query session generates far more
-      // codegen units than that, so re-runs were janino-recompiling
-      // classes the first run had already built and evicted
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // "No Partition Defined for Window operation" warnings here are fully
-    // attributed: every unpartitioned window in the suite sits over a
-    // provably aggregate-sized relation (quota tables, 10-bin reliability
-    // relations, dim-sized BH/ROC ranks — the boundedGlobalWindow
-    // whitelist in PlanAudit.scala, pinned per query as `gwin` in
-    // PLANS.json). Silence those two loggers so the bench tail is not
-    // alarming noise; an attribution note is printed with the result and
-    // recorded in BENCH_FULL.json.
-    Seq("org.apache.spark.sql.execution.window.WindowExec",
-        "org.apache.spark.sql.execution.window.WindowGroupLimitExec")
-      .foreach(n => org.apache.logging.log4j.core.config.Configurator
-        .setLevel(n, org.apache.logging.log4j.Level.ERROR))
+    val spark = GraftSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     // JIT/codegen/FS-cache warmup so the first timed query is not charged
     // for JVM startup costs
     Seq("lineitem", "orders", "part", "customer", "supplier",
@@ -73,16 +46,10 @@ object Bench {
         .withColumn("r", row_number().over(w))
         .count()
     } catch { case _: Throwable => () }
-    def esc(s: String): String = s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => " "
-      case c => c.toString
-    }
     // SPARK_GRAFT_ONLY: comma-separated query filter for local iteration
     // (unset in the driver's run = bench everything)
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    def runPass(): Seq[(String, Either[String, Double])] =
+    def runPass(): Seq[(String, Result)] =
       SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
       .map { case (name, fn) =>
@@ -165,51 +132,20 @@ object Bench {
       .getOrElse(if (only.isEmpty) 2 else 1)
     val pass1 = runPass()
     val allPasses = pass1 +: (2 to passes).map(_ => runPass())
-    val results = pass1.map { case (name, _) =>
-      val attempts = allPasses.flatMap(_.collectFirst {
-        case (`name`, r) => r })
-      val times = attempts.collect { case Right(t) => t }
-      // any successful attempt beats any error: a query that ran green
-      // once is slow-at-worst, not broken
-      if (times.nonEmpty) (name, Right(times.min): Either[String, Double])
-      else (name, attempts.head)
-    }
-    val errs = results.collect { case (k, Left(m)) =>
-      s""""${esc(k)}":"${esc(m)}""""
-    }.mkString("{", ",", "}")
-    val total = results.collect { case (_, Right(v)) => v }.sum
-
-    // Full-precision record for the judge / local iteration.
-    val fullQs = results.map {
-      case (k, Right(v)) => s""""${esc(k)}":$v"""
-      case (k, Left(_))  => s""""${esc(k)}":-1"""
-    }.mkString("{", ",", "}")
-    // per-pass record: each pass entry is itself the min of two
-    // back-to-back runs (see `once`). Persisting them alongside the
-    // cross-pass min keeps rounds comparable across protocol changes —
-    // the round-10 switch from single-pass to min-of-two silently made
-    // BENCH_FULL deltas non-apples-to-apples (second pass runs with
-    // warmed page cache + JIT); now the protocol and raw passes are in
-    // the artifact.
-    val passTimes = pass1.map { case (name, _) =>
-      val per = allPasses.map(_.collectFirst { case (`name`, r) => r }
-        .fold("-1") { case Right(t) => t.toString; case Left(_) => "-1" })
-      s""""${esc(name)}":[${per.mkString(",")}]"""
-    }.mkString("{", ",", "}")
-    val gwinNote = "unpartitioned-window warnings are whitelisted: every " +
-      "such window sorts an aggregate-sized relation (PlanAudit." +
-      "boundedGlobalWindow; per-query gwin pins in PLANS.json)"
+    val results = best(allPasses)
     // Ambient-drift estimate vs the PRIOR artifact (read before this run
     // overwrites it): the median per-query time ratio over queries green
     // in both runs. The median is robust to the handful of queries a
     // round actually touched, so it reads as the host-speed delta —
     // this quantifies the cross-round "everything is uniformly N%
     // slower" signature in the artifact itself instead of in prose.
-    val drift: Option[(Double, Int, String)] = try {
+    val prior: Option[JsonNode] = try {
       val p = java.nio.file.Paths.get("/root/repo/BENCH_FULL.json")
-      if (!java.nio.file.Files.exists(p)) None else {
-        val om = new com.fasterxml.jackson.databind.ObjectMapper()
-        val root = om.readTree(java.nio.file.Files.readString(p))
+      if (!java.nio.file.Files.exists(p)) None
+      else Some(json.readTree(java.nio.file.Files.readString(p)))
+    } catch { case _: Throwable => None }
+    val drift: Option[(Double, Int, String)] = prior.flatMap { root =>
+      try {
         val priorProtocol = Option(root.get("protocol"))
           .map(_.asText).getOrElse("unknown")
         val pq = root.get("queries")
@@ -224,38 +160,21 @@ object Bench {
             else (ratios(ratios.size / 2 - 1) + ratios(ratios.size / 2)) / 2.0
           Some((med, ratios.size, priorProtocol))
         }
-      }
-    } catch { case _: Throwable => None }
+      } catch { case _: Throwable => None }
+    }
     // drift HISTORY (round-13): the single vs-prior median can't
     // distinguish round-to-round noise from a slow monotonic host decay
     // (five +3% rounds compound to +16%). Carry the last 5 medians
     // forward in the artifact: the chain of pct entries IS the decay
     // record — alternating signs = ambient noise, one-sided = the host.
     val driftHistory: Seq[Double] = {
-      val prior = try {
-        val p = java.nio.file.Paths.get("/root/repo/BENCH_FULL.json")
-        if (!java.nio.file.Files.exists(p)) Seq.empty[Double] else {
-          val om = new com.fasterxml.jackson.databind.ObjectMapper()
-          val h = om.readTree(java.nio.file.Files.readString(p))
-            .get("ambient_drift_history")
-          if (h == null || !h.isArray) Seq.empty[Double]
-          else (0 until h.size).map(h.get(_).asDouble)
-        }
-      } catch { case _: Throwable => Seq.empty[Double] }
-      (prior ++ drift.map { case (med, _, _) =>
+      val h = prior.map(_.path("ambient_drift_history")).filter(_.isArray)
+      val before = h.fold(Seq.empty[Double])(a =>
+        (0 until a.size).map(a.get(_).asDouble))
+      (before ++ drift.map { case (med, _, _) =>
         math.rint((med - 1.0) * 1000.0) / 10.0 }).takeRight(5)
     }
-    val driftJson = drift.fold("") { case (med, n, pp) =>
-      val pct = (med - 1.0) * 100.0
-      s""","ambient_drift_vs_prior":{"median_ratio":${math.rint(med * 1000) / 1000.0},"pct":${math.rint(pct * 10) / 10.0},"n_shared":$n,"prior_protocol":"${esc(pp)}"}"""
-    }
-    // the accumulated decay record must survive a run that cannot compute
-    // drift vs the prior artifact (e.g. first run after an artifact loss) —
-    // emit it whenever non-empty, independent of this run's drift
-    val fullHistJson =
-      if (driftHistory.isEmpty) ""
-      else s""","ambient_drift_history":[${driftHistory.mkString(",")}]"""
-    val full = s"""{"metric":"total","value":$total,"unit":"sec","nq":${results.size},"n_err":${results.count(_._2.isLeft)},"protocol":"per-query min over $passes suite passes x 2 back-to-back runs"$driftJson$fullHistJson,"pass_times":$passTimes,"gwin_note":"$gwinNote","queries":$fullQs,"errors":$errs,"sf":"$sfDir"}"""
+    val (full, line) = render(allPasses, drift, driftHistory, sfDir)
     // a SPARK_GRAFT_ONLY-filtered run is local iteration — don't clobber
     // the committed full-suite snapshot with a partial one. Print the
     // FULL json instead (it is small for a filtered set): the per-pass
@@ -267,45 +186,6 @@ object Bench {
         java.nio.file.Paths.get("/root/repo/BENCH_FULL.json"), full + "\n")
       catch { case _: Throwable => () }
     else println(full)
-
-    // Compact stdout line, hard-capped to fit the driver's tail window.
-    def fmt(v: Double): String = {
-      val s = f"$v%.3g"
-      // %.3g can emit "0.00123" or "1.23e+01"; normalize exponent form
-      if (s.contains('e')) f"$v%.2f" else s
-    }
-    // The errors map must be bounded too — round 6's 13 × ~140-char error
-    // strings alone exceeded the driver's window and pushed the JSON head
-    // out, leaving BENCH_r6 unparseable. Compact line: at most 6 errors at
-    // 40 chars each plus an n_err count; full messages live in
-    // BENCH_FULL.json.
-    val nErr = results.count(_._2.isLeft)
-    val compactErrs = results.collect { case (k, Left(m)) => (k, m) }
-      .take(6)
-      .map { case (k, m) => s""""${esc(k)}":"${esc(m.take(40))}"""" }
-      .mkString("{", ",", "}")
-    val compactEntries = results.map {
-      case (k, Right(v)) => (k, s""""${esc(k)}":${fmt(v)}""", v)
-      case (k, Left(_))  => (k, s""""${esc(k)}":-1""", Double.MaxValue)
-    }
-    // the drift history rides the compact line too (~40 chars for 5
-    // entries): BENCH_r*.json is the driver-captured artifact the judge
-    // reads, and the decay record must be visible there, not only in
-    // BENCH_FULL
-    val histJson =
-      if (driftHistory.isEmpty) ""
-      else s""","drift_hist_pct":[${driftHistory.mkString(",")}]"""
-    // slowest first: the informative entries survive truncation
-    val ordered = compactEntries.sortBy(-_._3)
-    val budget = 1550 -
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","nq":${results.size},"n_err":$nErr$histJson,"queries":{},"errors":$compactErrs,"sf":"$sfDir"}""".length
-    val kept = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-    var used = 0
-    ordered.foreach { case (k, entry, _) =>
-      if (used + entry.length + 1 <= budget) { kept += ((k, entry)); used += entry.length + 1 }
-    }
-    val qs = kept.sortBy(_._1).map(_._2).mkString("{", ",", "}")
-    val line = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","nq":${results.size},"n_err":$nErr$histJson,"queries":$qs,"errors":$compactErrs,"sf":"$sfDir"}"""
     spark.stop()
     // attribution for any window warnings earlier in the log — printed
     // just above the JSON so the driver's tail window carries it; the
@@ -323,5 +203,114 @@ object Bench {
           driftHistory.mkString(", "))
     }
     println(line)
+  }
+
+  /** Per query, in pass-1 order: the fastest time over all passes, or
+    * the pass-1 error when no attempt ran green. Any successful attempt
+    * beats any error: a query that ran green once is slow-at-worst, not
+    * broken. */
+  private[graft] def best(allPasses: Seq[Seq[(String, Result)]])
+      : Seq[(String, Result)] = allPasses.head.map { case (name, _) =>
+    val attempts = allPasses.flatMap(_.collectFirst { case (`name`, r) => r })
+    val times = attempts.collect { case Right(t) => t }
+    if (times.nonEmpty) (name, Right(times.min)) else (name, attempts.head)
+  }
+
+  /** The run's two records: the full-precision BENCH_FULL.json line and
+    * the compact stdout line, which is hard-capped to fit the driver's
+    * tail window. Error messages are flattened to one line (control
+    * characters become spaces). */
+  private[graft] def render(allPasses: Seq[Seq[(String, Result)]],
+      drift: Option[(Double, Int, String)], driftHistory: Seq[Double],
+      sfDir: String): (String, String) = {
+    def oneLine(s: String): String = s.map(c => if (c < ' ') ' ' else c)
+    val results = best(allPasses)
+    val errors = results.collect { case (k, Left(m)) => (k, oneLine(m)) }
+    val total = results.collect { case (_, Right(v)) => v }.sum
+
+    val full = json.createObjectNode().put("metric", "total")
+      .put("value", total).put("unit", "sec").put("nq", results.size)
+      .put("n_err", errors.size).put("protocol", s"per-query min over " +
+        s"${allPasses.size} suite passes x 2 back-to-back runs")
+    drift.foreach { case (med, n, pp) =>
+      val pct = (med - 1.0) * 100.0
+      full.putObject("ambient_drift_vs_prior")
+        .put("median_ratio", math.rint(med * 1000) / 1000.0)
+        .put("pct", math.rint(pct * 10) / 10.0)
+        .put("n_shared", n).put("prior_protocol", oneLine(pp))
+    }
+    // the accumulated decay record must survive a run that cannot compute
+    // drift vs the prior artifact (e.g. first run after an artifact loss) —
+    // emit it whenever non-empty, independent of this run's drift
+    if (driftHistory.nonEmpty) {
+      val h = full.putArray("ambient_drift_history")
+      driftHistory.foreach(h.add(_))
+    }
+    // per-pass record: each pass entry is itself the min of two
+    // back-to-back runs (see `once`). Persisting them alongside the
+    // cross-pass min keeps rounds comparable across protocol changes —
+    // the round-10 switch from single-pass to min-of-two silently made
+    // BENCH_FULL deltas non-apples-to-apples (second pass runs with
+    // warmed page cache + JIT); now the protocol and raw passes are in
+    // the artifact.
+    val passTimes = full.putObject("pass_times")
+    results.foreach { case (name, _) =>
+      val per = passTimes.putArray(name)
+      allPasses.foreach(_.collectFirst { case (`name`, Right(t)) => t }
+        .fold(per.add(-1))(per.add(_)))
+    }
+    full.put("gwin_note", "unpartitioned-window warnings are whitelisted: " +
+      "every such window sorts an aggregate-sized relation (PlanAudit." +
+      "boundedGlobalWindow; per-query gwin pins in PLANS.json)")
+    val fullQs = full.putObject("queries")
+    results.foreach {
+      case (k, Right(v)) => fullQs.put(k, v)
+      case (k, Left(_)) => fullQs.put(k, -1)
+    }
+    val fullErrs = full.putObject("errors")
+    errors.foreach { case (k, m) => fullErrs.put(k, m) }
+    full.put("sf", sfDir)
+
+    // Compact line: three significant digits per time, written as the
+    // formatted text (%.3g can emit "1.23e+01"; normalize exponent form)
+    def fmt(v: Double): String = {
+      val s = f"$v%.3g"
+      if (s.contains('e')) f"$v%.2f" else s
+    }
+    val compact = json.createObjectNode().put("metric", "total")
+      .putRawValue("value", new RawValue(fmt(total))).put("unit", "sec")
+      .put("nq", results.size).put("n_err", errors.size)
+    // the drift history rides the compact line too (~40 chars for 5
+    // entries): BENCH_r*.json is the driver-captured artifact the judge
+    // reads, and the decay record must be visible there, not only in
+    // BENCH_FULL
+    if (driftHistory.nonEmpty) {
+      val h = compact.putArray("drift_hist_pct")
+      driftHistory.foreach(h.add(_))
+    }
+    val qs = compact.putObject("queries")
+    // The errors map must be bounded too — round 6's 13 × ~140-char error
+    // strings alone exceeded the driver's window and pushed the JSON head
+    // out, leaving BENCH_r6 unparseable. Compact line: at most 6 errors at
+    // 40 chars each plus an n_err count; full messages live in
+    // BENCH_FULL.json.
+    val compactErrs = compact.putObject("errors")
+    errors.take(6).foreach { case (k, m) => compactErrs.put(k, m.take(40)) }
+    compact.put("sf", sfDir)
+    // slowest first: the informative entries survive truncation
+    val budget = 1550 - json.writeValueAsString(compact).length
+    var used = 0
+    val kept = results.map {
+      case (k, Right(v)) => (k, fmt(v), v)
+      case (k, Left(_)) => (k, "-1", Double.MaxValue)
+    }.sortBy(-_._3).filter { case (k, v, _) =>
+      val len = json.writeValueAsString(k).length + 1 + v.length + 1
+      val fits = used + len <= budget
+      if (fits) used += len
+      fits
+    }
+    kept.sortBy(_._1).foreach { case (k, v, _) =>
+      qs.putRawValue(k, new RawValue(v)) }
+    (json.writeValueAsString(full), json.writeValueAsString(compact))
   }
 }

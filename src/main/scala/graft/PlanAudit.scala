@@ -19,7 +19,8 @@ import org.apache.spark.sql.SparkSession
   *
   * Usage: runMain graft.PlanAudit <sfDir> [--write PLANS.json]
   *                                        [--diff PLANS.json]
-  *                                        [--expect EXPECT.json] [queryName...]
+  *                                        [--expect EXPECT.json]
+  *                                        [--explain outDir] [queryName...]
   *  - --write: dump {query -> {bnlj, cart, exchanges, codegen}} JSON
   *  - --diff:  compare against a previously-written baseline; exit 1 on
   *             any regression (exchanges up, codegen spans down, new
@@ -35,6 +36,14 @@ import org.apache.spark.sql.SparkSession
   *             improvement — fails, so a new residue can't hide behind a
   *             hand-written header. Overlay file: tools/PLANS_SF01_EXPECT
   *             .json, same format as PLANS.json.
+  *  - --explain: write each audited query's `explain("formatted")` plan
+  *             to outDir/<query>.txt, at the audit's pinned grain (local[4],
+  *             AQE off, 4 shuffle partitions) — the drill-down companion
+  *             to the counters. Reading the plan beats reasoning about
+  *             it: the round-9 hot-band-guard rework looked
+  *             exchange-neutral on paper, but the dump showed per-consumer
+  *             column pruning had defeated exchange reuse and the minhash
+  *             sketch kernel ran once per consumer.
   */
 object PlanAudit {
 
@@ -57,6 +66,7 @@ object PlanAudit {
     var writePath: Option[String] = None
     var diffPath: Option[String] = None
     var expectPath: Option[String] = None
+    var explainDir: Option[String] = None
     val names = scala.collection.mutable.Set[String]()
     var i = 1
     while (i < args.length) {
@@ -64,18 +74,14 @@ object PlanAudit {
         case "--write" => writePath = Some(args(i + 1)); i += 2
         case "--diff" => diffPath = Some(args(i + 1)); i += 2
         case "--expect" => expectPath = Some(args(i + 1)); i += 2
+        case "--explain" => explainDir = Some(args(i + 1)); i += 2
         case n => names += n; i += 1
       }
     }
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession(4)
     spark.sparkContext.setLogLevel("ERROR")
-    val res = audit(spark, sfDir, names.toSet, writePath, diffPath, expectPath)
+    val res = audit(spark, sfDir, names.toSet, writePath, diffPath, expectPath,
+      explainDir = explainDir)
     spark.stop()
     if (!res.clean) sys.exit(1)
   }
@@ -223,12 +229,6 @@ object PlanAudit {
       bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
     } catch { case _: Throwable => Thread.sleep(150) }
 
-  /** Run the audit over the registered queries (all of them when `names`
-    * is empty) on the given session. The session's AQE is switched off
-    * and shuffle partitions pinned to 4 for the duration (AQE's wrapper
-    * hides codegen spans and double-prints the plan; pins were written
-    * at 4 partitions) — pass a DEDICATED session (`newSession()` from a
-    * test) so those conf writes don't leak into other work. */
   /** Parse a {query -> shape} JSON file (PLANS.json / an --expect overlay). */
   private def readShapes(p: String): Map[String, Shape] = {
     val om = new com.fasterxml.jackson.databind.ObjectMapper()
@@ -246,10 +246,19 @@ object PlanAudit {
     m.toMap
   }
 
+  /** Run the audit over the registered queries (all of them when `names`
+    * is empty) on the given session. The session's AQE is switched off
+    * and shuffle partitions pinned to 4 for the duration (AQE's wrapper
+    * hides codegen spans and double-prints the plan; pins were written
+    * at 4 partitions) — pass a DEDICATED session (`newSession()` from a
+    * test) so those conf writes don't leak into other work. With
+    * `explainDir`, each audited query's formatted plan is written there. */
   def audit(spark: SparkSession, sfDir: String, names: Set[String],
             writePath: Option[String], diffPath: Option[String],
             expectPath: Option[String] = None,
-            out: String => Unit = println): Result = {
+            out: String => Unit = println,
+            explainDir: Option[String] = None): Result = {
+    explainDir.foreach(d => new java.io.File(d).mkdirs())
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     spark.conf.set("spark.sql.shuffle.partitions", "4")
     spark.conf.set("spark.sql.ansi.enabled", "false")
@@ -329,7 +338,11 @@ object PlanAudit {
             // audit them against the query that actually fired them
             val late = drainSites()
             prevName.foreach(p => auditSites(p, late, straggler = true))
-            val pobj = fn(spark, sfDir).queryExecution.executedPlan
+            val qe = fn(spark, sfDir).queryExecution
+            val pobj = qe.executedPlan
+            explainDir.foreach(d => java.nio.file.Files.writeString(
+              java.nio.file.Paths.get(d, s"$name.txt"),
+              qe.explainString(org.apache.spark.sql.execution.FormattedMode)))
             val plan = pobj.toString
             val bnlj = "BroadcastNestedLoopJoin".r.findAllIn(plan).size
             val cart = "CartesianProduct".r.findAllIn(plan).size
@@ -404,18 +417,8 @@ object PlanAudit {
       // clobbering it with a one-entry file (twice-bitten lesson)
       val merged = scala.collection.mutable.LinkedHashMap[String, Shape]()
       val path = java.nio.file.Paths.get(p)
-      if (names.nonEmpty && java.nio.file.Files.exists(path)) {
-        val om = new com.fasterxml.jackson.databind.ObjectMapper()
-        val root = om.readTree(java.nio.file.Files.readString(path))
-        val fields = root.fields()
-        while (fields.hasNext) {
-          val e = fields.next()
-          val v = e.getValue
-          merged(e.getKey) = Shape(v.get("bnlj").asInt, v.get("cart").asInt,
-            v.get("exchanges").asInt, v.get("codegen").asInt,
-            Option(v.get("gwin")).map(_.asInt).getOrElse(0))
-        }
-      }
+      if (names.nonEmpty && java.nio.file.Files.exists(path))
+        merged ++= readShapes(p)
       shapes.foreach { case (n, s) => merged(n) = s }
       val json = merged.toSeq.sortBy(_._1).map { case (n, s) =>
         s""""$n": {"bnlj": ${s.bnlj}, "cart": ${s.cart}, "exchanges": ${s.exch}, "codegen": ${s.wsc}, "gwin": ${s.gwin}}"""

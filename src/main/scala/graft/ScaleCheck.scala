@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scaling-evidence harness: synthesizes a 10x dataset from sf0.1 by
@@ -165,14 +165,7 @@ object ScaleCheck {
     }
     val names = if (nameArgs.nonEmpty) Flagships.filter(nameArgs.toSet)
                 else Flagships
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(32)
 
     // key columns to offset per copy so distinct-key counts scale too
     val allKeyCols: Map[String, Seq[String]] = Map(

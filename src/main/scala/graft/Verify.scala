@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import com.fasterxml.jackson.databind.ObjectMapper
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,47 +10,15 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      // keep CPU-dense small-byte kernel stages wide (see Bench.scala)
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
+    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
     new java.io.File(outDir).mkdirs()
     // oracle_sql.json is written BEFORE the query loop: it depends only
     // on the registry, and writing it last meant an external kill mid-run
     // (driver wall-clock budget) lost the entire round's oracle map —
     // every completed dump would then read as rows-only.
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    // Residual oracles (the converged-kernel certificates) read the
-    // engine's own dumped parquet back via DuckDB to check a claimed
-    // fixed point — the dump directory is only known here, so the SQL
-    // carries a token that is substituted with the ABSOLUTE path at dump
-    // time (the comparator may run with a different working directory).
-    val outAbs = Paths.get(outDir).toAbsolutePath.toString
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) =>
-        s"${q(k)}: ${q(v.replace("__VERIFY_OUT__", outAbs))}" }
-      .mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      oracleJson(SparkEntry.oracleSql, Paths.get(outDir).toAbsolutePath.toString))
     // same per-query watchdog as Bench: one hung query degrades to one
     // missing dump (the driver records it as an error), not a stalled gate
     val timeoutMs =
@@ -83,5 +51,20 @@ object Verify {
       }
     }
     spark.stop()
+  }
+
+  /** oracle_sql.json: query name -> DuckDB SQL. Residual oracles (the
+    * converged-kernel certificates) read the engine's own dumped parquet
+    * back via DuckDB to check a claimed fixed point — the dump directory
+    * is only known here, so the SQL carries a token that is substituted
+    * with the ABSOLUTE path `outAbs` (the comparator may run with a
+    * different working directory). */
+  private[graft] def oracleJson(oracleSql: Map[String, String],
+                                outAbs: String): String = {
+    val m = new ObjectMapper()
+    val root = m.createObjectNode()
+    oracleSql.foreach { case (k, v) =>
+      root.put(k, v.replace("__VERIFY_OUT__", outAbs)) }
+    m.writeValueAsString(root)
   }
 }

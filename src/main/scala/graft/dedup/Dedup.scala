@@ -17,14 +17,6 @@ import graft.text.Text
   */
 object Dedup {
 
-  /** Heavy per-document expressions (128-hash signatures) must not run on
-    * a handful of input splits: a small-but-dense corpus file arrives as
-    * one partition and serializes the whole computation. Fan the rows out
-    * to the session's parallelism first (at real scale the input already
-    * has >= that many splits and this is a no-op). */
-  private def spread(df: DataFrame): DataFrame =
-    graft.ops.Relational.spread(df) // shared home since round 15
-
   /** Exact dedup on normalized-text hash. Returns one surviving row per
     * distinct content (min id wins, deterministic) plus the duplicate-group
     * size. */
@@ -962,7 +954,7 @@ object Dedup {
     * the exact-Jaccard verify rejects empty-universe pairs as NaN). */
   def minhashSignatures(df: DataFrame, idCol: String, textCol: String,
                         k: Int = 3, numHashes: Int = 128): DataFrame =
-    spread(df).select(col(idCol).as("id"),
+    graft.ops.Relational.spread(df).select(col(idCol).as("id"),
       graft.catalyst.ArrayFunctions.minhashSig(col(textCol), k, numHashes).as("sig"))
 
   /** Static minhash-signature kernel behind [[minhashSignatures]] /
@@ -1185,7 +1177,7 @@ object Dedup {
     // yields a NULL sketch (expression null propagation; the pre-round-5
     // UDF returned 0L — pair outputs unaffected, see minhashSignatures).
     val fk = math.max(featureK, 1)
-    spread(df).select(col(idCol).as("id"),
+    graft.ops.Relational.spread(df).select(col(idCol).as("id"),
       graft.catalyst.ArrayFunctions.simhashSig(col(textCol), fk).as("simhash"))
   }
 

@@ -1,7 +1,5 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
-
 /** The standing build gate for plan discipline (round-13): `sbt test`
   * now fails — not just the per-round `runMain graft.PlanAudit` ritual —
   * when a registered query loses its PLANS.json pin, regresses its plan
@@ -10,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * collect. Runs the exact same audit body as the runMain on a dedicated
   * child session (the audit pins AQE off + 4 shuffle partitions, which
   * must not leak into the other suites' shared session). */
-class PlanAuditSpec extends AnyFunSuite {
+class PlanAuditSpec extends SparkSpec {
 
   test("all registered queries match their pinned plan shapes and every " +
       "driver collect is plan-bounded or whitelisted under the row cap") {
@@ -48,5 +46,18 @@ class PlanAuditSpec extends AnyFunSuite {
     // on a non-exempt query, EXTRA_CROSS past the allowance) must also
     // fail: they are the audit's primary signal, the pins its memory
     assert(flagged.isEmpty, s"plan audit red flags:\n$flagged")
+  }
+
+  test("--explain writes each audited query's formatted plan") {
+    val dir = java.nio.file.Files.createTempDirectory("explain")
+    val res = PlanAudit.audit(spark.newSession(), sf001,
+      Set("q_scan_prune", "q_ppm_join"),
+      writePath = None, diffPath = None, out = _ => (),
+      explainDir = Some(dir.toString))
+    assert(res.shapes.keySet == Set("q_scan_prune", "q_ppm_join"))
+    res.shapes.keys.foreach { n =>
+      val txt = java.nio.file.Files.readString(dir.resolve(s"$n.txt"))
+      assert(txt.startsWith("== Physical Plan =="), txt.take(200))
+    }
   }
 }
